@@ -149,23 +149,21 @@ def _lsh_buckets_gen(planes: list[list[float]], n_bands: int, vec_name: str):
             n = len(col)
             buckets = np.zeros((n, n_bands), np.int64)
             if n:
-                widths = np.zeros(n, np.int64)
-                if col.null_count == 0:
-                    lv = col.cast(pa.list_(pa.float64()))
-                    offs = np.asarray(lv.offsets, dtype=np.int64)
-                    widths = np.diff(offs)
+                lv = col.cast(pa.list_(pa.float64()))
+                offs = np.asarray(lv.offsets, dtype=np.int64)
+                widths = np.diff(offs)
+                if col.null_count:
+                    # a null slot may still span child values; only the
+                    # slot itself is degenerate, never its neighbours
+                    widths[~np.asarray(col.is_valid())] = 0
                 good = np.nonzero(widths == dim)[0]
+                if good.size and lv.values.null_count:
+                    valid = np.concatenate(
+                        ([0], np.cumsum(np.asarray(lv.values.is_valid())))
+                    )
+                    good = good[valid[offs[good] + dim] - valid[offs[good]] == dim]
                 if good.size:
                     flat = np.asarray(lv.values, dtype=np.float64)
-                    if lv.values.null_count:
-                        elem_ok = np.asarray(lv.values.is_valid())
-                        row_ok = np.add.reduceat(
-                            elem_ok.astype(np.int64), offs[:-1][widths > 0]
-                        )
-                        ok_rows = np.zeros(n, bool)
-                        ok_rows[widths > 0] = row_ok == widths[widths > 0]
-                        good = good[ok_rows[good]]
-                if good.size:
                     starts = offs[good]
                     gather = (starts[:, None] + np.arange(dim)[None, :]).ravel()
                     mat = flat[gather].reshape(good.size, dim)

@@ -22,12 +22,18 @@ overwrite so a re-run replaces exactly its own time slice.
 
 from __future__ import annotations
 
+import contextlib
 import fnmatch
 import glob as globlib
+import json
 import os
 import re
+import shutil
+import tempfile
 import time
+import uuid
 from collections.abc import Callable, Iterable
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta
 
@@ -79,44 +85,80 @@ class Target:
     ``unexpanded_id`` is the pattern it came from; ``unique_id`` the
     concrete path (possibly a glob). A Spark parquet directory counts
     as existing when it has a _SUCCESS marker or any data file.
+
+    The base class is a PLAIN target: no versions, no recorded inputs,
+    readers and writers use ``unique_id`` directly and ``commit`` is a
+    no-op. :class:`VersionedTableTarget` overrides these hooks, so the
+    staleness predicate and the executors never branch on the flavor.
+    Storage access goes through three listing primitives (local
+    filesystem here; :class:`ObjectStoreTarget` swaps in Hadoop's).
     """
 
     unique_id: str
     unexpanded_id: str = ""
     start: datetime | None = None
 
-    def _paths(self) -> list[str]:
+    # --- listing primitives ---
+
+    def _matches(self) -> list[tuple[object, bool]]:
+        """(handle, is_dir) for every path ``unique_id`` matches."""
         if any(ch in self.unique_id for ch in "*?["):
-            return globlib.glob(self.unique_id)
-        return [self.unique_id] if os.path.exists(self.unique_id) else []
+            paths = globlib.glob(self.unique_id)
+        else:
+            paths = [self.unique_id] if os.path.exists(self.unique_id) else []
+        return [(p, os.path.isdir(p)) for p in paths]
+
+    def _listdir(self, handle) -> list[str]:
+        return os.listdir(handle)
+
+    def _mtimes(self, handle, is_dir: bool) -> Iterable[float]:
+        """mtime of a file, or of every file under a directory."""
+        if not is_dir:
+            return [os.path.getmtime(handle)]
+        return (
+            os.path.getmtime(os.path.join(root, f))
+            for root, _dirs, files in os.walk(handle)
+            for f in files
+        )
+
+    # --- freshness ---
 
     @property
     def exists(self) -> bool:
-        for p in self._paths():
-            if os.path.isdir(p):
-                entries = os.listdir(p)
-                if "_SUCCESS" in entries or any(
-                    e.endswith(".parquet") or e.endswith(".csv") or e.endswith(".json")
-                    for e in entries
-                ):
-                    return True
-            else:
-                return True
-        return False
+        return any(
+            not is_dir
+            or any(
+                e == "_SUCCESS" or e.endswith((".parquet", ".csv", ".json"))
+                for e in self._listdir(h)
+            )
+            for h, is_dir in self._matches()
+        )
 
     def get_mtime(self) -> float | None:
         """Newest mtime across matched files (None if nothing exists)."""
-        best: float | None = None
-        for p in self._paths():
-            if os.path.isdir(p):
-                for root, _dirs, files in os.walk(p):
-                    for f in files:
-                        m = os.path.getmtime(os.path.join(root, f))
-                        best = m if best is None else max(best, m)
-            else:
-                m = os.path.getmtime(p)
-                best = m if best is None else max(best, m)
-        return best
+        return max(
+            (m for h, is_dir in self._matches() for m in self._mtimes(h, is_dir)),
+            default=None,
+        )
+
+    # --- versioning hooks (plain target: no versions) ---
+
+    def get_version(self) -> int | None:
+        return None
+
+    def recorded_inputs(self) -> dict[str, int] | None:
+        return None
+
+    def read_path(self) -> str | None:
+        """Path a consumer reads."""
+        return self.unique_id
+
+    def stage_data_path(self) -> str:
+        """Path a producer writes."""
+        return self.unique_id
+
+    def commit(self, data_path: str | None = None, inputs: dict[str, int] | None = None) -> None:
+        """Publish written data: a plain target is visible once written."""
 
 
 _URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
@@ -128,8 +170,8 @@ class ObjectStoreTarget(Target):
     (``s3a://``, ``gs://``, ``abfs://``, ``hdfs://``, ``file://``).
     Spark-first equivalent of the reference's S3-backed target flavor
     (pub:builder/targets.py::S3BackedLocalFileSystemTarget): existence
-    and freshness come from the OBJECT STORE's listing via the active
-    SparkSession's Hadoop configuration (credentials, endpoints), not
+    and freshness come from the OBJECT STORE's listing via the running
+    SparkContext's Hadoop configuration (credentials, endpoints), not
     the local disk — so the scheduler and a 1000-executor cluster
     agree on artifact state, with no staging copies.
 
@@ -142,55 +184,43 @@ class ObjectStoreTarget(Target):
     """
 
     def _hadoop(self):
-        from pyspark.sql import SparkSession
+        from pyspark import SparkContext
 
-        spark = SparkSession.getActiveSession()
-        if spark is None:
+        # the process-wide context, not the thread-local active session:
+        # scheduler worker threads have no active session of their own
+        sc = SparkContext._active_spark_context
+        if sc is None:
             raise RuntimeError(
-                "ObjectStoreTarget needs an active SparkSession (its Hadoop "
+                "ObjectStoreTarget needs a running SparkContext (its Hadoop "
                 "configuration supplies filesystem credentials/endpoints)"
             )
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
+        jvm = sc._jvm
+        conf = sc._jsc.hadoopConfiguration()
         uri = jvm.java.net.URI.create(self.unique_id)
         return jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf), jvm
 
-    def _statuses(self):
+    def _matches(self) -> list[tuple[object, bool]]:
         fs, jvm = self._hadoop()
         path = jvm.org.apache.hadoop.fs.Path(self.unique_id)
         if any(ch in self.unique_id for ch in "*?["):
-            sts = fs.globStatus(path)
-            return (list(sts) if sts is not None else []), fs
-        return ([fs.getFileStatus(path)] if fs.exists(path) else []), fs
+            sts = list(fs.globStatus(path) or [])
+        else:
+            sts = [fs.getFileStatus(path)] if fs.exists(path) else []
+        return [((fs, st), st.isDirectory()) for st in sts]
 
-    @property
-    def exists(self) -> bool:
-        sts, fs = self._statuses()
-        for st in sts:
-            if st.isDirectory():
-                entries = [f.getPath().getName() for f in fs.listStatus(st.getPath())]
-                if "_SUCCESS" in entries or any(
-                    e.endswith(".parquet") or e.endswith(".csv") or e.endswith(".json")
-                    for e in entries
-                ):
-                    return True
-            else:
-                return True
-        return False
+    def _listdir(self, handle) -> list[str]:
+        fs, st = handle
+        return [f.getPath().getName() for f in fs.listStatus(st.getPath())]
 
-    def get_mtime(self) -> float | None:
-        best: float | None = None
-        sts, fs = self._statuses()
-        for st in sts:
-            if st.isDirectory():
-                it = fs.listFiles(st.getPath(), True)
-                while it.hasNext():
-                    m = it.next().getModificationTime() / 1000.0
-                    best = m if best is None else max(best, m)
-            else:
-                m = st.getModificationTime() / 1000.0
-                best = m if best is None else max(best, m)
-        return best
+    def _mtimes(self, handle, is_dir: bool) -> Iterable[float]:
+        fs, st = handle
+        if not is_dir:
+            return [st.getModificationTime() / 1000.0]
+        it = fs.listFiles(st.getPath(), True)
+        out = []
+        while it.hasNext():
+            out.append(it.next().getModificationTime() / 1000.0)
+        return out
 
 
 @dataclass(frozen=True)
@@ -242,14 +272,13 @@ class VersionedTableTarget(Target):
             f for f in os.listdir(d) if re.fullmatch(r"v\d{8}\.json", f)
         )
 
-    def _latest(self) -> dict | None:
-        import json
-
-        ms = self._manifests()
-        if not ms:
-            return None
-        with open(os.path.join(self._log_dir(), ms[-1])) as f:
+    def _manifest(self, name: str) -> dict:
+        with open(os.path.join(self._log_dir(), name)) as f:
             return json.load(f)
+
+    def _latest(self) -> dict | None:
+        ms = self._manifests()
+        return self._manifest(ms[-1]) if ms else None
 
     @property
     def exists(self) -> bool:
@@ -274,15 +303,11 @@ class VersionedTableTarget(Target):
         or of an explicit ``version`` — TIME TRAVEL: any committed
         snapshot stays readable by number until its manifest is
         removed, exactly the Delta/Iceberg `VERSION AS OF` contract."""
-        import json
-
         if version is None:
             m = self._latest()
             return None if m is None else m.get("data_path")
-        path = os.path.join(self._log_dir(), f"v{version:08d}.json")
         try:
-            with open(path) as f:
-                return json.load(f).get("data_path")
+            return self._manifest(f"v{version:08d}.json").get("data_path")
         except OSError:
             return None
 
@@ -305,18 +330,10 @@ class VersionedTableTarget(Target):
         directly; consumers follow the committed manifest's
         ``data_path``.
         """
-        import uuid
-
         return os.path.join(
             self.table_path,
             f"data-v{(self.get_version() or 0) + 1:08d}-{uuid.uuid4().hex[:8]}",
         )
-
-    def next_data_path(self) -> str:
-        """Back-compat alias for :meth:`stage_data_path` (kept because
-        early callers used this name; it has the same uniqueness
-        guarantee now)."""
-        return self.stage_data_path()
 
     def commit(
         self,
@@ -340,9 +357,6 @@ class VersionedTableTarget(Target):
         rebuilds from current inputs), exactly Delta's conflicting-
         transaction check. Commits with unknown inputs (``None`` —
         external appends, not dep rebuilds) retry unconditionally."""
-        import json
-        import tempfile
-
         d = self._log_dir()
         os.makedirs(d, exist_ok=True)
         version = (self.get_version() or 0) + 1
@@ -364,17 +378,16 @@ class VersionedTableTarget(Target):
             try:
                 with os.fdopen(fd, "w") as f:
                     json.dump(manifest, f)
-                target = os.path.join(d, f"v{version:08d}.json")
+                name = f"v{version:08d}.json"
                 try:
-                    os.link(tmp, target)  # atomic put-if-absent
+                    os.link(tmp, os.path.join(d, name))  # atomic put-if-absent
                     return version
                 except FileExistsError:
                     # lost the race — OCC re-check against the winner
                     # before retrying on the next slot
                     if inputs is not None:
                         try:
-                            with open(target) as f:
-                                winner = json.load(f)
+                            winner = self._manifest(name)
                         except (OSError, ValueError):
                             winner = {}
                         w_inputs = winner.get("inputs") or {}
@@ -392,7 +405,7 @@ class VersionedTableTarget(Target):
                             ) from None
                     version += 1
             finally:
-                with __import__("contextlib").suppress(OSError):
+                with contextlib.suppress(OSError):
                     os.remove(tmp)
 
     def vacuum(
@@ -424,8 +437,6 @@ class VersionedTableTarget(Target):
 
         Returns ``{"removed_manifests": [...], "removed_data": [...]}``.
         """
-        import shutil
-
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1 (the current snapshot stays)")
         ms = self._manifests()
@@ -434,17 +445,14 @@ class VersionedTableTarget(Target):
         for name in ms:
             if name in keep_ms:
                 continue
-            with __import__("contextlib").suppress(OSError):
+            with contextlib.suppress(OSError):
                 os.remove(os.path.join(self._log_dir(), name))
                 removed_manifests.append(name)
         # data dirs referenced by any SURVIVING manifest stay
         referenced = set()
         for name in self._manifests():
             try:
-                import json
-
-                with open(os.path.join(self._log_dir(), name)) as f:
-                    dp = json.load(f).get("data_path")
+                dp = self._manifest(name).get("data_path")
             except (OSError, ValueError):
                 continue
             if dp:
@@ -476,7 +484,7 @@ class VersionedTableTarget(Target):
                 if not entry.startswith(".commit."):
                     continue
                 path = os.path.join(log_dir, entry)
-                with __import__("contextlib").suppress(OSError):
+                with contextlib.suppress(OSError):
                     if now - os.path.getmtime(path) >= min_age_sec:
                         os.remove(path)
         return {"removed_manifests": removed_manifests, "removed_data": removed_data}
@@ -616,24 +624,20 @@ class ConcreteJob:
     def get_stale(self) -> bool:
         if not self.target.exists:
             return True
-        # Version-based staleness (VersionedTableTarget pairs): when
-        # the target snapshot RECORDS the dep version it was built
-        # from, compare versions — a dep rewritten at the same version
-        # (compaction, object-store mtime churn) is NOT fresh data,
-        # and a version bump always is, regardless of clock skew.
-        # Deps without versions fall back to the mtime comparison.
-        recorded = (
-            self.target.recorded_inputs()
-            if isinstance(self.target, VersionedTableTarget)
-            else None
-        )
+        # Version-based staleness: when the target snapshot RECORDS
+        # the dep versions it was built from, compare versions — a dep
+        # rewritten at the same version (compaction, object-store mtime
+        # churn) is NOT fresh data, and a version bump always is,
+        # regardless of clock skew. Deps without a version (plain
+        # targets) fall back to the mtime comparison.
+        recorded = self.target.recorded_inputs()
         t_mtime = self.target.get_mtime() or 0.0
         for tgts in self.dep_targets.values():
             for d in tgts:
                 if not d.exists:
                     continue
-                if recorded is not None and isinstance(d, VersionedTableTarget):
-                    dv = d.get_version() or 0
+                dv = None if recorded is None else d.get_version()
+                if dv is not None:
                     rv = recorded.get(d.unique_id)
                     if rv is None or int(rv) < dv:
                         return True
@@ -691,7 +695,13 @@ class BuildManager:
             j
             for j in self.jobs.values()
             if j.targets
-            and (j.targets == pattern or fnmatch.fnmatch(pattern, j.targets) or j.targets in pattern)
+            and (
+                j.targets == pattern
+                or fnmatch.fnmatch(pattern, j.targets)
+                # a dep under the target directory, never a sibling
+                # sharing its prefix (…/%Y-%m vs …/%Y-%m-%d)
+                or pattern.startswith(j.targets.rstrip("/") + "/")
+            )
         ]
 
     def expand(self, start: datetime, end: datetime) -> "BuildGraph":
@@ -755,6 +765,33 @@ class BuildGraph:
 # PrintExecutor, ExecutionManager)
 
 
+def build_context(spark, cj: ConcreteJob) -> BuildContext:
+    """The context a job run sees, shared by the real and the dry run:
+    existing deps resolve through ``read_path()`` (a versioned dep's
+    CURRENT snapshot data path, never its table root, which
+    accumulates uniquely-named staging dirs of live and crashed
+    writers), and the target through ``stage_data_path()`` (a fresh
+    per-writer staging dir for a versioned table, so the manifest is
+    the only contended slot)."""
+
+    def dep_path(t: Target) -> str:
+        p = t.read_path()
+        if p is None:
+            raise RuntimeError(
+                f"versioned dep {t.unique_id} has a committed manifest "
+                "with no data_path — nothing readable to build from"
+            )
+        return p
+
+    return BuildContext(
+        spark,
+        cj.start,
+        cj.end,
+        {pat: [dep_path(t) for t in tgts if t.exists] for pat, tgts in cj.dep_targets.items()},
+        cj.target.stage_data_path(),
+    )
+
+
 class SparkExecutor:
     """Runs the job fn and writes its DataFrame to the target path."""
 
@@ -762,53 +799,21 @@ class SparkExecutor:
         self.spark = spark
 
     def execute(self, cj: ConcreteJob) -> None:
-        versioned = isinstance(cj.target, VersionedTableTarget)
-
-        def dep_path(t: Target) -> str:
-            if not isinstance(t, VersionedTableTarget):
-                return t.unique_id
-            # consumers of a versioned dep read its CURRENT snapshot's
-            # data path, never the table root: the root accumulates
-            # uniquely-named staging dirs (live writers, crashed
-            # writers), so a root read would return duplicated rows
-            p = t.read_path()
-            if p is None:
-                raise RuntimeError(
-                    f"versioned dep {t.unique_id} has a committed manifest "
-                    "with no data_path — nothing readable to build from"
-                )
-            return p
-
-        ctx = BuildContext(
-            spark=self.spark,
-            start=cj.start,
-            end=cj.end,
-            dep_paths={
-                pat: [dep_path(t) for t in tgts if t.exists]
-                for pat, tgts in cj.dep_targets.items()
-            },
-            target_path=(
-                # unique per-writer staging dir: concurrent writers on
-                # the same table never share a data directory; the
-                # manifest (put-if-absent) is the only contended slot
-                cj.target.stage_data_path() if versioned else cj.target.unique_id
-            ),
-        )
+        ctx = build_context(self.spark, cj)
         df = cj.job.run(ctx)
         if df is not None:
             df.write.mode("overwrite").parquet(ctx.target_path)
-        if versioned:
-            # data is on disk but INVISIBLE until this manifest lands —
-            # a crash before commit leaves no snapshot (no _SUCCESS
-            # half-written-directory hazard). The manifest records each
-            # versioned dep's version for version-based staleness.
-            inputs = {
-                d.unique_id: d.get_version() or 0
-                for tgts in cj.dep_targets.values()
-                for d in tgts
-                if isinstance(d, VersionedTableTarget) and d.exists
-            }
-            cj.target.commit(data_path=ctx.target_path, inputs=inputs)
+        # a versioned target's data is on disk but INVISIBLE until its
+        # manifest lands — a crash before commit leaves no snapshot (no
+        # _SUCCESS half-written-directory hazard). The manifest records
+        # each versioned dep's version for version-based staleness.
+        inputs = {
+            d.unique_id: v
+            for tgts in cj.dep_targets.values()
+            for d in tgts
+            if (v := d.get_version()) is not None
+        }
+        cj.target.commit(data_path=ctx.target_path, inputs=inputs)
 
 
 class PrintExecutor:
@@ -820,17 +825,7 @@ class PrintExecutor:
         self.printed: list[str] = []
 
     def execute(self, cj: ConcreteJob) -> None:
-        ctx = BuildContext(
-            spark=self.spark,
-            start=cj.start,
-            end=cj.end,
-            dep_paths={
-                pat: [t.unique_id for t in tgts if t.exists]
-                for pat, tgts in cj.dep_targets.items()
-            },
-            target_path=cj.target.unique_id,
-        )
-        df = cj.job.run(ctx)
+        df = cj.job.run(build_context(self.spark, cj))
         desc = f"DRY-RUN {cj.unique_id} -> {cj.target.unique_id}"
         if df is not None:
             try:
@@ -847,17 +842,18 @@ class ExecutionManager:
     """Walks the expanded graph, runs should-run jobs, retries failures,
     re-evaluates state after each completion.
 
-    ``max_workers > 1`` dispatches every READY job (all graph
-    predecessors finished) concurrently on a thread pool — wave
-    scheduling. A SparkSession accepts job submissions from many
-    threads (each thread's actions become independent Spark jobs, FIFO/
-    FAIR-scheduled across the cluster), so independent pipeline
-    branches overlap their stages instead of serializing on the driver:
-    the difference between a 1000-executor cluster draining one branch
-    at a time and all branches at once. should-run/staleness is always
-    evaluated AFTER the job's predecessors finish (submission time),
-    preserving the serial path's freshness semantics; results are only
-    mutated on the coordinating thread.
+    One ready-set scheduler runs every build: a job is dispatched to a
+    pool of ``max_workers`` threads once all its graph predecessors
+    have finished; ``max_workers=1`` is the serial case. A
+    SparkSession accepts job submissions from many threads (each
+    thread's actions become independent Spark jobs, FIFO/FAIR-scheduled
+    across the cluster), so independent pipeline branches overlap their
+    stages instead of serializing on the driver: the difference between
+    a 1000-executor cluster draining one branch at a time and all
+    branches at once. should-run/staleness is evaluated when the job
+    starts, i.e. AFTER its predecessors finished, so every job sees its
+    inputs' post-build state; results are only mutated on the
+    coordinating thread.
     """
 
     def __init__(
@@ -900,8 +896,6 @@ class ExecutionManager:
 
     def history(self) -> list[dict]:
         """All journal entries (oldest first); [] without a journal."""
-        import json
-
         if not self.state_path:
             return []
         out: list[dict] = []
@@ -925,8 +919,6 @@ class ExecutionManager:
         return last
 
     def _journal(self, unique_id: str, status: str, now: float, duration: float) -> None:
-        import json
-
         if not self.state_path:
             return
         try:
@@ -1000,16 +992,14 @@ class ExecutionManager:
         journal + failure_backoff configured)."""
         bg = self.manager.expand(start, end)
         last = self._last_outcomes() if self.failure_backoff is not None else {}
-        if max_workers <= 1:
-            for cj in bg.topological():
-                self.results[cj.unique_id] = self._run_one(cj, now, force, last)
-            return self.results
-
-        from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
-
         g = bg.graph
+        if not nx.is_directed_acyclic_graph(g):
+            # raise before running anything: a cyclic graph would
+            # otherwise build only the jobs outside the cycle
+            cycle = " -> ".join(u for u, _v in nx.find_cycle(g))
+            raise ValueError(f"dependency cycle: {cycle}")
         indeg = {n: g.in_degree(n) for n in g.nodes}
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        with ThreadPoolExecutor(max_workers=max(1, max_workers)) as pool:
             futures: dict = {}
 
             def submit(n: str) -> None:
@@ -1027,10 +1017,4 @@ class ExecutionManager:
                         indeg[succ] -= 1
                         if indeg[succ] == 0:
                             submit(succ)
-        if len(self.results) != g.number_of_nodes():
-            # nodes whose in-degree never reached 0 — the expanded graph
-            # has a cycle; match the serial path, which raises via
-            # nx.topological_sort instead of returning partial results
-            unreachable = sorted(n for n in g.nodes if n not in self.results)
-            raise ValueError(f"dependency cycle: {len(unreachable)} unreachable nodes, e.g. {unreachable[:3]}")
         return self.results
